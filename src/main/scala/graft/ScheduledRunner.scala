@@ -43,27 +43,17 @@ object ScheduledRunner {
 
   /** One attempt = the full pipeline run AND the result writes (the DAG's
     * retry unit is the whole notebook run, `0eeeb621168f_dag.py:29-33`).
+    * The cleaned tables [[BatchPipeline.run]] persisted are released even
+    * when a write fails, so a retry starts from the raw JSON.
     */
   def runOnce(s: SparkSession, pinDir: String, geoDir: String,
-      userDir: String, outDir: String): Unit = {
-    import graft.schemas.Schemas
-    val c = BatchPipeline.clean(
-      BatchPipeline.readTopic(s, pinDir, Schemas.pinRaw),
-      BatchPipeline.readTopic(s, geoDir, Schemas.geoRaw),
-      BatchPipeline.readTopic(s, userDir, Schemas.userRaw))
-    // persist the cleaned tables ONCE and fan the 9 writes over the
-    // materialization — BatchPipeline's documented caller contract;
-    // without it every write re-reads and re-cleans the raw JSON
-    c.pin.persist(); c.geo.persist(); c.user.persist()
-    try BatchPipeline.queriesOver(c)
+      userDir: String, outDir: String): Unit =
+    try BatchPipeline.run(s, pinDir, geoDir, userDir)
       .toSeq.sortBy(_._1)
       .foreach { case (name, df) =>
         df.write.mode("overwrite").parquet(s"$outDir/$name")
       }
-    finally {
-      c.pin.unpersist(false); c.geo.unpersist(false); c.user.unpersist(false)
-    }
-  }
+    finally Caches.releaseAll()
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 4,

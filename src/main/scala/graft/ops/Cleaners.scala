@@ -82,6 +82,16 @@ object Cleaners {
     * sentinel->NULL, follower_count parse, save_location prefix strip,
     * rename index->ind, drop `downloaded`, fixed column order, dedup on
     * `description`.
+    *
+    * `dropDuplicates("description")` keeps an ARBITRARY row for each
+    * repeated description — whichever reaches the aggregate first, which
+    * depends on partitioning and task timing — so two evaluations of the
+    * same plan can keep different rows (all rows with a NULL or sentinel
+    * description collapse to one of them). The cleaned frame is therefore
+    * not a function of its input: consumers that must agree on the
+    * survivor have to read ONE materialization. [[graft.BatchPipeline.run]]
+    * persists the cleaned tables once per run for this reason, so the 9
+    * results and the written `pin_table` see the same surviving rows.
     */
   def pinClean(df: DataFrame): DataFrame =
     pinCleanCore(df).dropDuplicates("description")

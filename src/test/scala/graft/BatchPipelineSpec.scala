@@ -3,6 +3,10 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end batch pipeline spec: wire-faithful JSON fixtures
@@ -13,42 +17,7 @@ class BatchPipelineSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = TestSpark.session
 
-  private lazy val dirs: (String, String, String) = {
-    val base = Files.createTempDirectory("graft_batch").toString
-    def write(name: String, lines: Seq[String]): String = {
-      val d = new java.io.File(s"$base/$name"); d.mkdirs()
-      val f = new java.io.File(d, "part-0.json")
-      java.nio.file.Files.write(f.toPath,
-        lines.mkString("\n").getBytes("UTF-8"))
-      d.toString
-    }
-    def pin(i: Int, followers: String, cat: String, poster: String) =
-      s"""{"index": $i, "unique_id": "u$i", "title": "t$i",
-         |"description": "d$i", "poster_name": "$poster",
-         |"follower_count": "$followers", "tag_list": "x,y",
-         |"is_image_or_video": "image", "image_src": "http://i/$i",
-         |"downloaded": "1", "save_location": "Local save in /data/$cat",
-         |"category": "$cat"}""".stripMargin.replaceAll("\n", " ")
-    def geo(i: Int, country: String, yr: Int) =
-      s"""{"ind": $i, "country": "$country", "latitude": 10.0,
-         |"longitude": 20.0, "timestamp": "$yr-06-01T12:00:00"}"""
-        .stripMargin.replaceAll("\n", " ")
-    def user(i: Int, age: Int, joined: Int) =
-      s"""{"ind": $i, "first_name": "F$i", "last_name": "L$i",
-         |"age": $age, "date_joined": "$joined-03-01T00:00:00"}"""
-        .stripMargin.replaceAll("\n", " ")
-    val pins = Seq(
-      pin(1, "25k", "art", "alice"), pin(2, "2M", "art", "bob"),
-      pin(3, "500", "tech", "carol"), pin(4, "User Info Error", "tech", "dan"),
-      pin(5, "1k", "food", "eve"))
-    val geos = Seq(
-      geo(1, "US", 2019), geo(2, "US", 2020), geo(3, "DE", 2021),
-      geo(4, "DE", 2015), geo(5, "FR", 2022))
-    val users = Seq(
-      user(1, 20, 2016), user(2, 30, 2017), user(3, 30, 2017),
-      user(4, 55, 2018), user(5, 17, 2019))
-    (write("pin", pins), write("geo", geos), write("user", users))
-  }
+  private lazy val dirs = BatchPipelineSpec.fixtureDirs()
 
   private lazy val results = BatchPipeline.run(spark, dirs._1, dirs._2, dirs._3)
 
@@ -145,7 +114,73 @@ class BatchPipelineSpec extends AnyFunSuite {
     assert(spark.table("user_table").count() === 5)
   }
 
+  test("run persists the cleaned views once; every result reads that " +
+      "materialization, never the raw JSON") {
+    val qs = results
+    BatchPipelineSpec.views.foreach(v =>
+      assert(spark.catalog.isCached(v), s"$v is not cached"))
+    assert(qs.keySet === (1 to 9).map(i => s"q$i").toSet)
+    qs.foreach { case (q, df) =>
+      val plan = df.queryExecution.withCachedData
+      assert(plan.collectFirst { case r: InMemoryRelation => r }.nonEmpty,
+        s"$q does not read the persisted tables")
+      assert(BatchPipelineSpec.jsonScans(plan).isEmpty,
+        s"$q re-reads the raw JSON")
+    }
+  }
+
   private object Schemas2 {
     val pinCleanCols: Seq[String] = graft.schemas.Schemas.pinClean.fieldNames.toSeq
+  }
+}
+
+object BatchPipelineSpec {
+
+  val views: Seq[String] = Seq("pin_table", "geo_table", "user_table")
+
+  /** The plan's scans over raw JSON files. */
+  def jsonScans(plan: LogicalPlan): Seq[LogicalRelation] = plan.collect {
+    case l @ LogicalRelation(r: HadoopFsRelation, _, _, _, _)
+        if r.fileFormat.isInstanceOf[JsonFileFormat] => l
+  }
+
+  /** Writes the deterministic pin/geo/user JSON fixture under a new temp
+    * directory and returns the three topic dirs.
+    */
+  def fixtureDirs(): (String, String, String) = {
+    val base = Files.createTempDirectory("graft_batch").toString
+    def write(name: String, lines: Seq[String]): String = {
+      val d = new java.io.File(s"$base/$name"); d.mkdirs()
+      val f = new java.io.File(d, "part-0.json")
+      java.nio.file.Files.write(f.toPath,
+        lines.mkString("\n").getBytes("UTF-8"))
+      d.toString
+    }
+    def pin(i: Int, followers: String, cat: String, poster: String) =
+      s"""{"index": $i, "unique_id": "u$i", "title": "t$i",
+         |"description": "d$i", "poster_name": "$poster",
+         |"follower_count": "$followers", "tag_list": "x,y",
+         |"is_image_or_video": "image", "image_src": "http://i/$i",
+         |"downloaded": "1", "save_location": "Local save in /data/$cat",
+         |"category": "$cat"}""".stripMargin.replaceAll("\n", " ")
+    def geo(i: Int, country: String, yr: Int) =
+      s"""{"ind": $i, "country": "$country", "latitude": 10.0,
+         |"longitude": 20.0, "timestamp": "$yr-06-01T12:00:00"}"""
+        .stripMargin.replaceAll("\n", " ")
+    def user(i: Int, age: Int, joined: Int) =
+      s"""{"ind": $i, "first_name": "F$i", "last_name": "L$i",
+         |"age": $age, "date_joined": "$joined-03-01T00:00:00"}"""
+        .stripMargin.replaceAll("\n", " ")
+    val pins = Seq(
+      pin(1, "25k", "art", "alice"), pin(2, "2M", "art", "bob"),
+      pin(3, "500", "tech", "carol"), pin(4, "User Info Error", "tech", "dan"),
+      pin(5, "1k", "food", "eve"))
+    val geos = Seq(
+      geo(1, "US", 2019), geo(2, "US", 2020), geo(3, "DE", 2021),
+      geo(4, "DE", 2015), geo(5, "FR", 2022))
+    val users = Seq(
+      user(1, 20, 2016), user(2, 30, 2017), user(3, 30, 2017),
+      user(4, 55, 2018), user(5, 17, 2019))
+    (write("pin", pins), write("geo", geos), write("user", users))
   }
 }
